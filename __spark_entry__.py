@@ -605,7 +605,7 @@ def _q_transe_scores(spark: SparkSession, sf: str) -> DataFrame:
     folds) followed by −‖E[s]+R[p]−E[o]‖² scoring; the oracle re-trains
     the bit-identical numpy replica Spark-free."""
     g = pipeline.build_graph(spark, sf)
-    E, R = embeddings.fit_transe(g.triples, g.n_entities)
+    E, R = embeddings.fit(embeddings.TRANSE, g.triples, g.n_entities)
     return embeddings.transe_scores(g.triples, E, R)
 
 
@@ -615,7 +615,7 @@ def _q_hole_trained_scores(spark: SparkSession, sf: str) -> DataFrame:
     deterministic-fold machinery as TransE) then trained-parameter
     scoring; the oracle re-trains the bit-identical numpy replica."""
     g = pipeline.build_graph(spark, sf)
-    E, R = embeddings.fit_hole(g.triples, g.n_entities)
+    E, R = embeddings.fit(embeddings.HOLE, g.triples, g.n_entities)
     return embeddings.hole_trained_scores(g.triples, E, R)
 
 
@@ -626,7 +626,7 @@ def _q_rescal_trained_scores(spark: SparkSession, sf: str) -> DataFrame:
     side d² wide) then eₛᵀ·W_p·e_o scoring with the trained tables;
     the oracle re-trains the bit-identical numpy replica."""
     g = pipeline.build_graph(spark, sf)
-    E, W = embeddings.fit_rescal(g.triples, g.n_entities)
+    E, W = embeddings.fit(embeddings.RESCAL, g.triples, g.n_entities)
     return embeddings.rescal_trained_scores(g.triples, E, W)
 
 

@@ -62,7 +62,9 @@ MIN_BUCKET_CAP = 64
 # type_corrections alone instantiated the distribution subtree three
 # times (norms + parts + flip broadcast). Keyed by DataFrame identity
 # with the references held so id() stays stable (the patybred._PATHS_MEMO
-# pattern); everything is re-derived from the inputs on every run.
+# pattern); everything is re-derived from the inputs on every run. A
+# single slot: a call with another key drops the held entry, so the memo
+# pins at most one pair's checkpoint blocks in a long-lived session.
 _RAN_DIST_MEMO: dict[tuple, tuple] = {}
 
 
@@ -76,6 +78,7 @@ def _shared_ran_dist(facts: DataFrame, types: DataFrame, conf: float):
     hit = _RAN_DIST_MEMO.get(key)
     if hit is not None and hit[0] is facts and hit[1] is types:
         return hit[2], hit[3]
+    _RAN_DIST_MEMO.clear()
     ran = materialize(domran_model(facts, types, conf, "o"))
     dist = materialize(ot_dist(facts, types, "o"))
     _RAN_DIST_MEMO[key] = (facts, types, ran, dist)

@@ -1,24 +1,35 @@
-"""HolE scoring surface (SURVEY §2 M9 — the scoring operator only).
+"""Embedding-model scoring surfaces and one margin-ranking trainer (M9).
 
-Reference: /root/reference/embeddings.py:636 scores a triple (s, p, o)
-as ``sum(R[p] * ccorr(E[s], E[o]))`` (HolE); the embeddings themselves
-are trained there through TF/skge (embeddings.py:1-30), which is out of
-scope per the SURVEY north rule and absent from this container. The
-SCORING composition, however, is pure column algebra and is implemented
-here Spark-native: circular correlation via kgspark.simsearch.ccorr_col
-(rotated sequential dot products, JVM-side) contracted against the
-relation vector.
+Scoring. The reference's embeddings.py scores triples with four
+embedding families: HolE ``sum(R[p] * ccorr(E[s], E[o]))``
+(embeddings.py:636), RESCAL eₛᵀ·W_p·e_o, ProjE 'simple'
+(embeddings.py:404-448) and TransE −‖E[s]+R[p]−E[o]‖². Every score is
+pure column algebra here — circular correlation via
+kgspark.simsearch.ccorr_col or its unrolled :func:`ccorr_fast`,
+sequential dot folds bit-identical to DuckDB's list_dot_product, so the
+oracles reconstruct exact values. ``hole_scores``/``rescal_scores``/
+``proje_scores`` score DETERMINISTIC hash-derived parameters (the
+portable md5 substrate, kgspark.hashing — a single narrow projection
+with zero joins or shuffles); ``transe_scores``/``hole_trained_scores``/
+``rescal_trained_scores``/``proje_scores_trained`` take trained
+(id, vec) tables as joins without changing the composition.
 
-Embeddings are DETERMINISTIC hash-derived vectors (the portable md5
-substrate, kgspark.hashing) — a pure function of the entity/relation id,
-so (a) scoring is a single narrow projection with ZERO joins or
-shuffles, and (b) the DuckDB oracle reconstructs identical vectors and
-identical fold order (list_dot_product) for exact value checks. A
-trained-embedding table can be swapped in as a (id, vec) join without
-changing the composition.
+Training. The reference trains through skge/TF (embeddings.py:24-60,
+565-600): pairwise margin ranking with corrupt-object negatives. Here
+one distributed DataFrame-SGD trainer (:func:`fit`, :func:`train_epoch`,
+:func:`init_params`) runs every family, driven by a small
+:class:`Family` record — ``fit(TRANSE | HOLE | RESCAL, triples, n)``.
+The numpy replicas (``numpy_transe``/``numpy_hole``/``numpy_rescal``)
+re-train Spark-free with identical float-op order; the ``*_oracle_sql``
+builders embed their tables, so trained scores are checked exactly.
+ProjE's TF trainer stays out; :func:`numpy_proje_fit` is a driver-side
+stand-in.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -197,12 +208,45 @@ def rescal_scores(triples: DataFrame, d: int = DIM_EMB) -> DataFrame:
         "s", "p", "o", F.round(_dot(es, wv), 6).alias("score"))
 
 
-# ------------------------------------------------------- TransE training (M9)
+# -------------------------------------------- margin-ranking training (M9)
 
 TE_DIM = 16
 TE_LR = 0.1
 TE_MARGIN = 1.0
 TE_EPOCHS = 2
+HO_MARGIN = 0.2  # skge default (reference embeddings.py:566 margin=0.2)
+HO_LR = 0.1
+HO_EPOCHS = 2
+RS_LR = 0.1
+RS_MARGIN = 1.0
+RS_EPOCHS = 2
+
+
+@dataclass(frozen=True)
+class Family:
+    """One margin-ranking embedding family for :func:`fit`.
+
+    Holds the hash-substrate salts of the entity/relation tables and of
+    the corrupt-object negatives, the default hyper-parameters, whether
+    the relation parameter is a row-major-flattened d×d matrix (width d²)
+    rather than a d-vector, and the gradient stage
+    ``grads(t, margin, deterministic)``: it maps the joined per-triple
+    rows (s, _tp, o, o_neg, es, eo, en, rp) to the ACTIVE rows (hinge
+    satisfied) with their gradients (s, _tp, o, o_neg, g_s, g_o, g_n,
+    g_r). Everything else — init, negatives, joins, the gradient fold
+    and the update — is shared."""
+
+    ent_salt: str
+    rel_salt: str
+    neg_salt: str
+    lr: float
+    margin: float
+    epochs: int
+    grads: Callable[[DataFrame, float, bool], DataFrame]
+    rel_matrix: bool = False
+
+    def rel_width(self, d: int) -> int:
+        return d * d if self.rel_matrix else d
 
 
 def _l2norm_rows(tab: DataFrame, vec: str = "vec") -> DataFrame:
@@ -211,32 +255,35 @@ def _l2norm_rows(tab: DataFrame, vec: str = "vec") -> DataFrame:
     return tab.withColumn(vec, F.transform(F.col(vec), lambda x: x / n))
 
 
-def transe_init(triples: DataFrame, d: int = TE_DIM
+def init_params(fam: Family, triples: DataFrame, d: int = TE_DIM
                 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic initial (entity, relation) embedding tables from the
-    hash substrate — identical in the numpy oracle replica."""
+    """Deterministic initial (entity, relation) parameter tables from the
+    hash substrate — identical in the family's numpy oracle replica."""
     ents = (triples.select(F.col("s").alias("e"))
             .unionByName(triples.select(F.col("o").alias("e"))).distinct())
     rels = triples.select(F.col("p")).distinct()
-    E = ents.select("e", hash_embedding(F.col("e"), "te", d).alias("vec"))
-    R = rels.select("p", hash_embedding(F.col("p"), "tr", d).alias("vec"))
+    E = ents.select("e", hash_embedding(F.col("e"), fam.ent_salt, d)
+                    .alias("vec"))
+    R = rels.select("p", hash_embedding(F.col("p"), fam.rel_salt,
+                                        fam.rel_width(d)).alias("vec"))
     return E, R
 
 
-def transe_epoch(triples: DataFrame, E: DataFrame, R: DataFrame,
-                 n_entities: int, epoch: int, d: int = TE_DIM,
-                 lr: float = TE_LR, margin: float = TE_MARGIN,
-                 deterministic: bool = True
-                 ) -> tuple[DataFrame, DataFrame]:
-    """One distributed SGD epoch of squared-L2 TransE margin training.
+def train_epoch(fam: Family, triples: DataFrame, E: DataFrame,
+                R: DataFrame, n_entities: int, epoch: int, d: int = TE_DIM,
+                lr: float | None = None, margin: float | None = None,
+                deterministic: bool = True
+                ) -> tuple[DataFrame, DataFrame]:
+    """One distributed SGD epoch of margin-ranking training.
 
     Reference analog: the skge/TF trainers behind embeddings.py:24-60
-    (pairwise margin ranking with corrupt-object negatives). Spark-first
-    shape: entity vectors are normalized, per-triple gradient
-    contributions come from joins against the (entity|relation, vec)
-    tables, then summed per parameter. Negatives are content-keyed
+    and 565-600 (pairwise margin ranking with corrupt-object negatives).
+    Spark-first shape: entity vectors are normalized, per-triple
+    gradient contributions come from joins against the (entity|relation,
+    vec) tables, then summed per parameter. Negatives are content-keyed
     corrupt-objects (epoch-salted), the reference's corruption scheme
-    without rejection (documented simplification).
+    without rejection (documented simplification). ``lr``/``margin``
+    default to the family's.
 
     Two gradient-accumulation modes:
 
@@ -247,8 +294,8 @@ def transe_epoch(triples: DataFrame, E: DataFrame, R: DataFrame,
       (a hub entity collects millions of structs into one row), so this
       mode is for corpora small enough to oracle.
     * ``deterministic=False`` (scale mode, the large-corpus default via
-      :func:`fit_transe`): plain per-slot ``F.sum`` partial aggregation
-      — map-side combine, no per-entity array, hub entities cost O(d)
+      :func:`fit`): plain per-slot ``F.sum`` partial aggregation —
+      map-side combine, no per-entity array, hub entities cost O(d)
       state per partition instead of O(degree·d) in one row. Float sums
       are partition-order-dependent (≈1 ulp noise), which SGD tolerates.
     """
@@ -266,7 +313,7 @@ def transe_epoch(triples: DataFrame, E: DataFrame, R: DataFrame,
     t = triples.select("s", F.col("p").alias("_tp"), "o").withColumn(
         "o_neg",
         pick_mod([F.col("s"), F.col("_tp"), F.col("o"), F.lit(epoch)],
-                 n_entities, "teneg") + 1)
+                 n_entities, fam.neg_salt) + 1)
     t = (
         t.join(E.select(F.col("e").alias("s"), F.col("vec").alias("es")), "s")
         .join(E.select(F.col("e").alias("o"), F.col("vec").alias("eo")), "o")
@@ -276,30 +323,10 @@ def transe_epoch(triples: DataFrame, E: DataFrame, R: DataFrame,
               F.col("_tp") == F.col("p"))
         .drop("p")
     )
-    # a corrupt id may miss the entity table (ids are dense 1..n so it
-    # should not, but stay total): missing negative → inactive triple
-    dp = F.zip_with(F.zip_with(F.col("es"), F.col("rp"),
-                               lambda a, b: a + b),
-                    F.col("eo"), lambda a, b: a - b)
-    dn = F.zip_with(F.zip_with(F.col("es"), F.col("rp"),
-                               lambda a, b: a + b),
-                    F.coalesce(F.col("en"), F.col("eo")),
-                    lambda a, b: a - b)
-    act = (F.col("en").isNotNull()
-           & (F.lit(margin) + _dot(dp, dp) - _dot(dn, dn) > 0))
-    g_sp = F.zip_with(dp, dn, lambda a, b: 2.0 * a - 2.0 * b)  # ∂/∂es, ∂/∂rp
-    g_o = F.transform(dp, lambda a: -2.0 * a)                  # ∂/∂eo
-    g_n = F.transform(dn, lambda a: 2.0 * a)                   # ∂/∂en
-    # checkpoint the per-triple gradient rows: the downstream fold +
-    # parameter-update self-joins re-reference this subtree several
-    # times, and truncating here keeps the per-epoch plan flat
-    t = materialize(t.where(act).select(
-        "s", "_tp", "o", "o_neg",
-        g_sp.alias("g_sp"), g_o.alias("g_o"), g_n.alias("g_n")))
-
-    return _apply_grads(E, R, t.withColumnRenamed("g_sp", "g_s")
-                        .withColumn("g_r", F.col("g_s")), d, lr,
-                        deterministic)
+    g = fam.grads(t, fam.margin if margin is None else margin,
+                  deterministic)
+    return _apply_grads(E, R, g, d, fam.lr if lr is None else lr,
+                        deterministic, d_r=fam.rel_width(d))
 
 
 def _apply_grads(E: DataFrame, R: DataFrame, t: DataFrame, d: int,
@@ -308,7 +335,7 @@ def _apply_grads(E: DataFrame, R: DataFrame, t: DataFrame, d: int,
     """Shared SGD-update machinery: fold the per-triple gradient table
     ``t`` (s, _tp, o, o_neg, g_s, g_o, g_n, g_r) per entity/relation and
     apply ``x ← x − lr·Σg`` — the deterministic sorted fold or the
-    hub-safe partial-sum aggregate (see :func:`transe_epoch`).
+    hub-safe partial-sum aggregate (see :func:`train_epoch`).
 
     ``d_r`` is the relation-parameter width when it differs from the
     entity width ``d`` (RESCAL folds a row-major-flattened d×d matrix,
@@ -377,10 +404,10 @@ def _apply_grads(E: DataFrame, R: DataFrame, t: DataFrame, d: int,
     return E2, R2
 
 
-# Above this entity count fit_transe defaults to the scale-mode
-# (partial-sum) gradient aggregation: entity degree — the sorted fold's
-# per-row memory — is unbounded on real KGs, and a corpus this large is
-# past oracle scale anyway.
+# Above this entity count fit defaults to the scale-mode (partial-sum)
+# gradient aggregation: entity degree — the sorted fold's per-row
+# memory — is unbounded on real KGs, and a corpus this large is past
+# oracle scale anyway.
 TE_DETERMINISTIC_MAX = 1_000_000
 
 # The sorted fold's real cost is the largest per-key collect_list — the
@@ -406,32 +433,226 @@ def _auto_deterministic(triples: DataFrame, n_entities: int) -> bool:
     return (deg or 0) <= TE_DETERMINISTIC_MAX_DEGREE
 
 
-def fit_transe(triples: DataFrame, n_entities: int, d: int = TE_DIM,
-               epochs: int = TE_EPOCHS, lr: float = TE_LR,
-               margin: float = TE_MARGIN,
-               deterministic: bool | None = None
-               ) -> tuple[DataFrame, DataFrame]:
-    """Distributed TransE fit → (E(e, vec), R(p, vec)); each epoch is
-    checkpointed (the iterative-algorithm lineage-truncation pattern).
+def fit(fam: Family, triples: DataFrame, n_entities: int, d: int = TE_DIM,
+        epochs: int | None = None, lr: float | None = None,
+        margin: float | None = None, deterministic: bool | None = None
+        ) -> tuple[DataFrame, DataFrame]:
+    """Distributed margin-ranking fit of ``fam`` → (E(e, vec), R(p, vec));
+    each epoch is checkpointed (the iterative-algorithm
+    lineage-truncation pattern). ``epochs``/``lr``/``margin`` default to
+    the family's.
 
     ``deterministic=None`` auto-selects the gradient path: the
     bit-reproducible sorted fold (oracle parity) only when both the
     entity count (``TE_DETERMINISTIC_MAX``) and the max in/out-degree
     (``TE_DETERMINISTIC_MAX_DEGREE`` — the fold's actual per-key
     memory bound) are small; the hub-safe partial-sum aggregation
-    otherwise (see :func:`transe_epoch`); pass an explicit bool to
+    otherwise (see :func:`train_epoch`); pass an explicit bool to
     force either."""
     from kgspark.util import materialize
 
     if deterministic is None:
         deterministic = _auto_deterministic(triples, n_entities)
-    E, R = transe_init(triples, d)
+    E, R = init_params(fam, triples, d)
     E, R = materialize(E), materialize(R)
-    for ep in range(epochs):
-        E, R = transe_epoch(triples, E, R, n_entities, ep, d, lr, margin,
-                            deterministic)
+    for ep in range(fam.epochs if epochs is None else epochs):
+        E, R = train_epoch(fam, triples, E, R, n_entities, ep, d, lr,
+                           margin, deterministic)
         E, R = materialize(E), materialize(R)
     return E, R
+
+
+# ------------------------------------------------------- gradient stages
+
+def _transe_grads(t: DataFrame, margin: float,
+                  deterministic: bool) -> DataFrame:
+    """Squared-L2 TransE hinge gradients as JVM column algebra (no
+    Python UDF in the plan). With δ± = eₛ + r − e_o(') the active rows
+    carry ∂/∂eₛ = ∂/∂r = 2δ⁺ − 2δ⁻, ∂/∂e_o = −2δ⁺, ∂/∂e_o' = 2δ⁻."""
+    from kgspark.util import materialize
+
+    # a corrupt id may miss the entity table (ids are dense 1..n so it
+    # should not, but stay total): missing negative → inactive triple
+    dp = F.zip_with(F.zip_with(F.col("es"), F.col("rp"),
+                               lambda a, b: a + b),
+                    F.col("eo"), lambda a, b: a - b)
+    dn = F.zip_with(F.zip_with(F.col("es"), F.col("rp"),
+                               lambda a, b: a + b),
+                    F.coalesce(F.col("en"), F.col("eo")),
+                    lambda a, b: a - b)
+    act = (F.col("en").isNotNull()
+           & (F.lit(margin) + _dot(dp, dp) - _dot(dn, dn) > 0))
+    g_sp = F.zip_with(dp, dn, lambda a, b: 2.0 * a - 2.0 * b)  # ∂/∂es, ∂/∂rp
+    g_o = F.transform(dp, lambda a: -2.0 * a)                  # ∂/∂eo
+    g_n = F.transform(dn, lambda a: 2.0 * a)                   # ∂/∂en
+    # checkpoint the per-triple gradient rows: the downstream fold +
+    # parameter-update self-joins re-reference this subtree several
+    # times, and truncating here keeps the per-epoch plan flat
+    g = materialize(t.where(act).select(
+        "s", "_tp", "o", "o_neg",
+        g_sp.alias("g_s"), g_o.alias("g_o"), g_n.alias("g_n")))
+    return g.withColumn("g_r", F.col("g_s"))
+
+
+_KEY_COLS = ("s", "_tp", "o", "o_neg")
+_EMB_COLS = ("es", "eo", "en", "rp")
+_GRAD_SCHEMA = ("s long, _tp int, o long, o_neg long, "
+                "g_s array<double>, g_o array<double>, "
+                "g_n array<double>, g_r array<double>")
+
+
+def _arrow_grads(seq: Callable, vec: Callable) -> Callable:
+    """Gradient stage running a family's per-triple math in ONE
+    Arrow-batched ``mapInPandas`` pass per epoch.
+
+    HolE/RESCAL epochs are dense fixed-order linear algebra per triple
+    (circular correlations, mat-vecs, outer products); expressing that
+    in JVM column algebra is either interpreted per slot (higher-order
+    lambdas) or a ~20k-node unrolled plan whose codegen compile
+    dominates the epoch — exactly the case the Pandas-UDF escape hatch
+    exists for. The joins and the gradient application stay JVM-side.
+
+    ``seq`` and ``vec`` take (es, eo, en, rp) and return (f⁺, f⁻,
+    grads): the raw scores and a thunk → the gradients of the hinge
+    margin − f⁺ + f⁻ wrt (eₛ, e_o', r); wrt e_o it is the negated e_o'
+    gradient for both families. ``seq`` works on one triple's
+    python-float lists in the exact op order of the numpy replica
+    (``deterministic=True``, oracle-bit-exact); ``vec`` on stacked n-row
+    arrays with ``np.einsum`` (``deterministic=False``, order-free float
+    sums, ~100× the throughput — the large-corpus default, pairing with
+    the partial-sum fold downstream)."""
+
+    def stage(t: DataFrame, margin: float,
+              deterministic: bool) -> DataFrame:
+        from kgspark.util import materialize
+
+        def batches(it):
+            import numpy as np
+            import pandas as pd
+
+            for pdf in it:
+                # a corrupt id that missed the entity table → inactive
+                pdf = pdf[pdf["en"].notna().to_numpy()]
+                if not len(pdf):
+                    continue
+                if deterministic:
+                    out = [seq(*[[float(x) for x in v] for v in row])
+                           for row in zip(*(pdf[c] for c in _EMB_COLS))]
+                    act = np.array([margin + fn - fp > 0
+                                    for fp, fn, _ in out], dtype=bool)
+                    if not act.any():
+                        continue
+                    g_s, g_n, g_r = (np.array(g) for g in zip(
+                        *[grads() for (_, _, grads), a in zip(out, act)
+                          if a]))
+                else:
+                    fp, fn, grads = vec(*[np.stack(pdf[c].to_numpy())
+                                          for c in _EMB_COLS])
+                    act = margin + fn - fp > 0
+                    if not act.any():
+                        continue
+                    g_s, g_n, g_r = (g[act] for g in grads())
+                sel = pdf[act]
+                yield pd.DataFrame({
+                    **{c: sel[c].tolist() for c in _KEY_COLS},
+                    "g_s": list(g_s), "g_o": list(-g_n), "g_n": list(g_n),
+                    "g_r": list(g_r)})
+
+        return materialize(
+            t.select(*_KEY_COLS, *_EMB_COLS)
+            .mapInPandas(batches, _GRAD_SCHEMA))
+
+    return stage
+
+
+def _sdot(a, b) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _hole_seq(es, eo, en, rp):
+    """HolE, η = r·ccorr(s,o): ∂η/∂s = ccorr(r,o), ∂η/∂o = cconv(r,s),
+    ∂η/∂r = ccorr(s,o); sequential folds in :func:`numpy_hole` order."""
+    d = len(es)
+
+    def cc(a, b):
+        return [_sdot(a, [b[(i + k) % d] for i in range(d)])
+                for k in range(d)]
+
+    ccp, ccn = cc(es, eo), cc(es, en)
+    return _sdot(rp, ccp), _sdot(rp, ccn), lambda: (
+        [a - b for a, b in zip(cc(rp, en), cc(rp, eo))],
+        [_sdot(rp, [es[(j - k) % d] for k in range(d)]) for j in range(d)],
+        [a - b for a, b in zip(ccn, ccp)])
+
+
+def _hole_vec(es, eo, en, rp):
+    """Batched :func:`_hole_seq`: einsum over rolled index tensors."""
+    import numpy as np
+
+    d = es.shape[1]
+    idx_cc = np.array([[(i + k) % d for i in range(d)] for k in range(d)])
+    idx_cv = np.array([[(j - k) % d for k in range(d)] for j in range(d)])
+
+    def cc(a, b):
+        return np.einsum("ni,nki->nk", a, b[:, idx_cc])
+
+    ccp, ccn = cc(es, eo), cc(es, en)
+    return (np.einsum("nk,nk->n", rp, ccp), np.einsum("nk,nk->n", rp, ccn),
+            lambda: (cc(rp, en) - cc(rp, eo),
+                     np.einsum("nk,njk->nj", rp, es[:, idx_cv]),
+                     ccn - ccp))
+
+
+def _rescal_seq(es, eo, en, w):
+    """RESCAL, f = eₛᵀ·W_p·e_o (W_p flattened row-major):
+    ∂f/∂eₛ = W_p·e_o, ∂f/∂e_o = W_pᵀ·eₛ, ∂f/∂W_p = eₛ⊗e_o; sequential
+    mat-vec folds in :func:`numpy_rescal` order."""
+    d = len(es)
+
+    def mv(v):  # W·v, sequential row folds
+        return [_sdot(w[i * d:(i + 1) * d], v) for i in range(d)]
+
+    wvp, wvn = mv(eo), mv(en)
+    return _sdot(es, wvp), _sdot(es, wvn), lambda: (
+        [a - b for a, b in zip(wvn, wvp)],
+        [_sdot(w[j::d], es) for j in range(d)],  # Wᵀ·eₛ
+        [es[i] * (en[j] - eo[j]) for i in range(d) for j in range(d)])
+
+
+def _rescal_vec(es, eo, en, w):
+    """Batched :func:`_rescal_seq`: einsum mat-vecs and outer products."""
+    import numpy as np
+
+    n, d = es.shape
+    W3 = w.reshape(n, d, d)
+    wvp = np.einsum("nij,nj->ni", W3, eo)
+    wvn = np.einsum("nij,nj->ni", W3, en)
+    return (np.einsum("ni,ni->n", es, wvp), np.einsum("ni,ni->n", es, wvn),
+            lambda: (wvn - wvp, np.einsum("nij,ni->nj", W3, es),
+                     np.einsum("ni,nj->nij", es, en - eo)
+                     .reshape(n, d * d)))
+
+
+# Squared-L2 TransE, score −‖eₛ + r − e_o‖².
+TRANSE = Family("te", "tr", "teneg", TE_LR, TE_MARGIN, TE_EPOCHS,
+                _transe_grads)
+# HolE, skge's trainer behind the reference's SKGEWrapper
+# (embeddings.py:565-600). The hinge is on the RAW composition η rather
+# than skge's sigmoid activation (documented simplification — every
+# gradient stays polynomial, so the numpy replica is bit-exact with no
+# exp-implementation caveat).
+HOLE = Family("hoe", "hor", "honeg", HO_LR, HO_MARGIN, HO_EPOCHS,
+              _arrow_grads(_hole_seq, _hole_vec))
+# RESCAL, which the reference drives through skge like HolE; the
+# bilinear gradients are closed-form, so no TF/skge is needed.
+RESCAL = Family("rse", "rsw", "rsneg", RS_LR, RS_MARGIN, RS_EPOCHS,
+                _arrow_grads(_rescal_seq, _rescal_vec), rel_matrix=True)
+
+
+# ------------------------------------------------ trained-parameter scoring
 
 
 def transe_scores(triples: DataFrame, E: DataFrame, R: DataFrame) -> DataFrame:
@@ -447,13 +668,6 @@ def transe_scores(triples: DataFrame, E: DataFrame, R: DataFrame) -> DataFrame:
                     F.col("eo"), lambda a, b: a - b)
     return t.select("s", "p", "o",
                     F.round(-_dot(dv, dv), 6).alias("score"))
-
-
-# ------------------------------------------------------- HolE training (M9)
-
-HO_MARGIN = 0.2  # skge default (reference embeddings.py:566 margin=0.2)
-HO_LR = 0.1
-HO_EPOCHS = 2
 
 
 def _chain_dot(a: Column, b: Column, idxs: list[int]) -> Column:
@@ -477,209 +691,6 @@ def ccorr_fast(a: Column, b: Column, d: int) -> Column:
         for k in range(d)])
 
 
-def _hole_grad_kernel(d: int, margin: float, deterministic: bool):
-    """Arrow-batched HolE gradient kernel for ``mapInPandas``.
-
-    The epoch's per-triple math is dense fixed-order linear algebra
-    (five circular correlations/convolutions of width d per triple);
-    expressing it in JVM column algebra is either interpreted per slot
-    (higher-order lambdas) or a ~20k-node unrolled plan whose codegen
-    compile dominates the epoch — exactly the case the Pandas-UDF
-    escape hatch exists for. Two modes:
-
-    * ``deterministic=True``: sequential python-float folds, the exact
-      op order of :func:`numpy_hole` — oracle-bit-exact;
-    * ``deterministic=False`` (scale): vectorized ``np.einsum`` over a
-      rolled index tensor — order-free float sums, ~100× the
-      throughput, the large-corpus default (pairs with the partial-sum
-      gradient fold downstream).
-
-    Emits only ACTIVE rows (margin hinge satisfied) with their
-    gradient arrays: ∂η/∂s = ccorr(r,o), ∂η/∂o = cconv(r,s),
-    ∂η/∂r = ccorr(s,o), differenced positive-vs-negative.
-    """
-    import numpy as np
-    import pandas as pd
-
-    idx_cc = np.array([[(i + k) % d for i in range(d)] for k in range(d)])
-    idx_cv = np.array([[(j - k) % d for k in range(d)] for j in range(d)])
-
-    def seq_cc(a, b):
-        out = []
-        for k in range(d):
-            acc = 0.0
-            for i in range(d):
-                acc += a[i] * b[(i + k) % d]
-            out.append(acc)
-        return out
-
-    def seq_conv(a, b):
-        out = []
-        for j in range(d):
-            acc = 0.0
-            for k in range(d):
-                acc += a[k] * b[(j - k) % d]
-            out.append(acc)
-        return out
-
-    def sdot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cols = {"s": [], "_tp": [], "o": [], "o_neg": [],
-                    "g_s": [], "g_o": [], "g_n": [], "g_r": []}
-            if deterministic:
-                # zip over columns: itertuples would positional-rename
-                # the leading-underscore _tp column
-                for s_, tp_, o_, on_, es_, eo_, en_, rp_ in zip(
-                        pdf["s"], pdf["_tp"], pdf["o"], pdf["o_neg"],
-                        pdf["es"], pdf["eo"], pdf["en"], pdf["rp"]):
-                    if en_ is None:
-                        continue
-                    es = [float(x) for x in es_]
-                    eo = [float(x) for x in eo_]
-                    en = [float(x) for x in en_]
-                    rp = [float(x) for x in rp_]
-                    ccp, ccn = seq_cc(es, eo), seq_cc(es, en)
-                    if margin + sdot(rp, ccn) - sdot(rp, ccp) <= 0:
-                        continue
-                    ccro, ccrn = seq_cc(rp, eo), seq_cc(rp, en)
-                    cv = seq_conv(rp, es)
-                    cols["s"].append(s_)
-                    cols["_tp"].append(tp_)
-                    cols["o"].append(o_)
-                    cols["o_neg"].append(on_)
-                    cols["g_s"].append([a - b for a, b in zip(ccrn, ccro)])
-                    cols["g_o"].append([-x for x in cv])
-                    cols["g_n"].append(cv)
-                    cols["g_r"].append([a - b for a, b in zip(ccn, ccp)])
-            else:
-                ok = pdf["en"].notna().to_numpy()
-                pdf = pdf[ok]
-                if not len(pdf):
-                    continue
-                es = np.stack(pdf["es"].to_numpy())
-                eo = np.stack(pdf["eo"].to_numpy())
-                en = np.stack(pdf["en"].to_numpy())
-                rp = np.stack(pdf["rp"].to_numpy())
-
-                def cc(a, b):
-                    return np.einsum("ni,nki->nk", a, b[:, idx_cc])
-
-                def conv(a, b):
-                    return np.einsum("nk,njk->nj", a, b[:, idx_cv])
-
-                ccp, ccn = cc(es, eo), cc(es, en)
-                act = (margin + np.einsum("nk,nk->n", rp, ccn)
-                       - np.einsum("nk,nk->n", rp, ccp)) > 0
-                if not act.any():
-                    continue
-                sel = pdf[act]
-                g_r = (ccn - ccp)[act]
-                g_s = (cc(rp, en) - cc(rp, eo))[act]
-                cv = conv(rp, es)[act]
-                cols["s"] = sel["s"].tolist()
-                cols["_tp"] = sel["_tp"].tolist()
-                cols["o"] = sel["o"].tolist()
-                cols["o_neg"] = sel["o_neg"].tolist()
-                cols["g_s"] = list(g_s)
-                cols["g_o"] = list(-cv)
-                cols["g_n"] = list(cv)
-                cols["g_r"] = list(g_r)
-            if cols["s"]:
-                yield pd.DataFrame(cols)
-
-    return batches
-
-
-def hole_init(triples: DataFrame, d: int = TE_DIM
-              ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic initial HolE parameter tables (salts distinct from
-    both the TransE trainer and the untrained hole_scores substrate)."""
-    ents = (triples.select(F.col("s").alias("e"))
-            .unionByName(triples.select(F.col("o").alias("e"))).distinct())
-    rels = triples.select(F.col("p")).distinct()
-    E = ents.select("e", hash_embedding(F.col("e"), "hoe", d).alias("vec"))
-    R = rels.select("p", hash_embedding(F.col("p"), "hor", d).alias("vec"))
-    return E, R
-
-
-def hole_epoch(triples: DataFrame, E: DataFrame, R: DataFrame,
-               n_entities: int, epoch: int, d: int = TE_DIM,
-               lr: float = HO_LR, margin: float = HO_MARGIN,
-               deterministic: bool = True
-               ) -> tuple[DataFrame, DataFrame]:
-    """One distributed SGD epoch of HolE margin-ranking training.
-
-    Reference analog: skge's HolE trainer behind the SKGEWrapper
-    (embeddings.py:565-600 — pairwise ranking with corrupt-object
-    negatives over the holographic composition η = r·ccorr(s,o)).
-    Spark-first shape mirrors :func:`transe_epoch` (same joins, same
-    deterministic-fold/partial-sum gradient modes via _apply_grads);
-    the ranking hinge is on the RAW composition η rather than skge's
-    sigmoid activation (documented simplification — keeps every
-    gradient polynomial, so the numpy replica is bit-exact with no
-    exp-implementation caveat). Gradients of η: ∂/∂r = ccorr(s,o),
-    ∂/∂s = ccorr(r,o), ∂/∂o = cconv(r,s).
-    """
-    from kgspark.hashing import pick_mod
-    from kgspark.util import materialize
-
-    E = materialize(_l2norm_rows(E))
-    t = triples.select("s", F.col("p").alias("_tp"), "o").withColumn(
-        "o_neg",
-        pick_mod([F.col("s"), F.col("_tp"), F.col("o"), F.lit(epoch)],
-                 n_entities, "honeg") + 1)
-    t = (
-        t.join(E.select(F.col("e").alias("s"), F.col("vec").alias("es")), "s")
-        .join(E.select(F.col("e").alias("o"), F.col("vec").alias("eo")), "o")
-        .join(E.select(F.col("e").alias("o_neg"),
-                       F.col("vec").alias("en")), "o_neg", "left")
-        .join(F.broadcast(R.withColumnRenamed("vec", "rp")),
-              F.col("_tp") == F.col("p"))
-        .drop("p")
-    )
-    # the hinge + gradient math runs in ONE Arrow pass per epoch (see
-    # _hole_grad_kernel: sequential folds for oracle parity, einsum at
-    # scale) — the joins and the gradient application stay JVM-side
-    out_schema = ("s long, _tp int, o long, o_neg long, "
-                  "g_s array<double>, g_o array<double>, "
-                  "g_n array<double>, g_r array<double>")
-    t = materialize(
-        t.select("s", "_tp", "o", "o_neg", "es", "eo", "en", "rp")
-        .mapInPandas(_hole_grad_kernel(d, margin, deterministic),
-                     out_schema))
-    return _apply_grads(E, R, t, d, lr, deterministic)
-
-
-def fit_hole(triples: DataFrame, n_entities: int, d: int = TE_DIM,
-             epochs: int = HO_EPOCHS, lr: float = HO_LR,
-             margin: float = HO_MARGIN,
-             deterministic: bool | None = None
-             ) -> tuple[DataFrame, DataFrame]:
-    """Distributed HolE fit → (E(e, vec), R(p, vec)); per-epoch
-    checkpointing and the deterministic/scale gradient-mode auto-switch
-    (entity-count AND max-degree bounded) exactly as
-    :func:`fit_transe`."""
-    from kgspark.util import materialize
-
-    if deterministic is None:
-        deterministic = _auto_deterministic(triples, n_entities)
-    E, R = hole_init(triples, d)
-    E, R = materialize(E), materialize(R)
-    for ep in range(epochs):
-        E, R = hole_epoch(triples, E, R, n_entities, ep, d, lr, margin,
-                          deterministic)
-        E, R = materialize(E), materialize(R)
-    return E, R
-
-
 def hole_trained_scores(triples: DataFrame, E: DataFrame, R: DataFrame,
                         d: int = TE_DIM) -> DataFrame:
     """→ (s, p, o, score): η = R[p]·ccorr(E[s], E[o]) over TRAINED
@@ -695,193 +706,6 @@ def hole_trained_scores(triples: DataFrame, E: DataFrame, R: DataFrame,
     t = t.select("s", "p", "o", cc.alias("_cc"), "rp")
     sc = _chain_dot(F.col("rp"), F.col("_cc"), list(range(d)))
     return t.select("s", "p", "o", F.round(sc, 6).alias("score"))
-
-
-# ------------------------------------------------------ RESCAL training (M9)
-
-RS_LR = 0.1
-RS_MARGIN = 1.0
-RS_EPOCHS = 2
-
-
-def rescal_init(triples: DataFrame, d: int = TE_DIM
-                ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic initial RESCAL parameter tables: entity vectors
-    (d) and ROW-MAJOR-FLATTENED relation matrices W_p (d² floats) from
-    the hash substrate, salts distinct from every other trainer."""
-    ents = (triples.select(F.col("s").alias("e"))
-            .unionByName(triples.select(F.col("o").alias("e"))).distinct())
-    rels = triples.select(F.col("p")).distinct()
-    E = ents.select("e", hash_embedding(F.col("e"), "rse", d).alias("vec"))
-    W = rels.select("p", hash_embedding(F.col("p"), "rsw", d * d)
-                    .alias("vec"))
-    return E, W
-
-
-def _rescal_grad_kernel(d: int, margin: float, deterministic: bool):
-    """Arrow-batched RESCAL gradient kernel for ``mapInPandas`` — the
-    third trainable family, no TF/skge needed: with score
-    f = eₛᵀ·W_p·e_o and the pairwise hinge
-    max(0, margin − f(s,p,o) + f(s,p,o')), the active-row gradients are
-
-    * ∂/∂eₛ  = W_p·e_o' − W_p·e_o
-    * ∂/∂e_o = −W_pᵀ·eₛ,  ∂/∂e_o' = +W_pᵀ·eₛ
-    * ∂/∂W_p = eₛ⊗e_o' − eₛ⊗e_o  (outer products, flattened row-major)
-
-    Same two modes as :func:`_hole_grad_kernel`: sequential python-float
-    folds bit-exact vs :func:`numpy_rescal` (oracle mode), ``np.einsum``
-    batched mat-vecs/outers in scale mode.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def mv(w, v):  # W·v, sequential row folds
-        out = []
-        for i in range(d):
-            acc = 0.0
-            for j in range(d):
-                acc += w[i * d + j] * v[j]
-            out.append(acc)
-        return out
-
-    def mtv(w, v):  # Wᵀ·v
-        out = []
-        for j in range(d):
-            acc = 0.0
-            for i in range(d):
-                acc += w[i * d + j] * v[i]
-            out.append(acc)
-        return out
-
-    def sdot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cols = {"s": [], "_tp": [], "o": [], "o_neg": [],
-                    "g_s": [], "g_o": [], "g_n": [], "g_r": []}
-            if deterministic:
-                for s_, tp_, o_, on_, es_, eo_, en_, w_ in zip(
-                        pdf["s"], pdf["_tp"], pdf["o"], pdf["o_neg"],
-                        pdf["es"], pdf["eo"], pdf["en"], pdf["rp"]):
-                    if en_ is None:
-                        continue
-                    es = [float(x) for x in es_]
-                    eo = [float(x) for x in eo_]
-                    en = [float(x) for x in en_]
-                    w = [float(x) for x in w_]
-                    wvp, wvn = mv(w, eo), mv(w, en)
-                    if margin + sdot(es, wvn) - sdot(es, wvp) <= 0:
-                        continue
-                    wt = mtv(w, es)
-                    cols["s"].append(s_)
-                    cols["_tp"].append(tp_)
-                    cols["o"].append(o_)
-                    cols["o_neg"].append(on_)
-                    cols["g_s"].append(
-                        [a - b for a, b in zip(wvn, wvp)])
-                    cols["g_o"].append([-x for x in wt])
-                    cols["g_n"].append(wt)
-                    cols["g_r"].append(
-                        [es[i] * (en[j] - eo[j])
-                         for i in range(d) for j in range(d)])
-            else:
-                ok = pdf["en"].notna().to_numpy()
-                pdf = pdf[ok]
-                if not len(pdf):
-                    continue
-                es = np.stack(pdf["es"].to_numpy())
-                eo = np.stack(pdf["eo"].to_numpy())
-                en = np.stack(pdf["en"].to_numpy())
-                W3 = np.stack(pdf["rp"].to_numpy()).reshape(-1, d, d)
-                wvp = np.einsum("nij,nj->ni", W3, eo)
-                wvn = np.einsum("nij,nj->ni", W3, en)
-                act = (margin + np.einsum("ni,ni->n", es, wvn)
-                       - np.einsum("ni,ni->n", es, wvp)) > 0
-                if not act.any():
-                    continue
-                sel = pdf[act]
-                wt = np.einsum("nij,ni->nj", W3, es)[act]
-                g_r = np.einsum("ni,nj->nij", es,
-                                en - eo)[act].reshape(-1, d * d)
-                cols["s"] = sel["s"].tolist()
-                cols["_tp"] = sel["_tp"].tolist()
-                cols["o"] = sel["o"].tolist()
-                cols["o_neg"] = sel["o_neg"].tolist()
-                cols["g_s"] = list((wvn - wvp)[act])
-                cols["g_o"] = list(-wt)
-                cols["g_n"] = list(wt)
-                cols["g_r"] = list(g_r)
-            if cols["s"]:
-                yield pd.DataFrame(cols)
-
-    return batches
-
-
-def rescal_epoch(triples: DataFrame, E: DataFrame, W: DataFrame,
-                 n_entities: int, epoch: int, d: int = TE_DIM,
-                 lr: float = RS_LR, margin: float = RS_MARGIN,
-                 deterministic: bool = True
-                 ) -> tuple[DataFrame, DataFrame]:
-    """One distributed SGD epoch of RESCAL margin-ranking training —
-    the Spark-first shape of :func:`transe_epoch`/:func:`hole_epoch`
-    (same joins, same content-keyed corrupt-object negatives, shared
-    :func:`_apply_grads` with the relation side d² wide). The reference
-    drives skge's RESCAL the same way it drives HolE
-    (embeddings.py:24-60); the trainer here needs no TF/skge — the
-    bilinear gradients are closed-form outer products."""
-    from kgspark.hashing import pick_mod
-    from kgspark.util import materialize
-
-    E = materialize(_l2norm_rows(E))
-    t = triples.select("s", F.col("p").alias("_tp"), "o").withColumn(
-        "o_neg",
-        pick_mod([F.col("s"), F.col("_tp"), F.col("o"), F.lit(epoch)],
-                 n_entities, "rsneg") + 1)
-    t = (
-        t.join(E.select(F.col("e").alias("s"), F.col("vec").alias("es")), "s")
-        .join(E.select(F.col("e").alias("o"), F.col("vec").alias("eo")), "o")
-        .join(E.select(F.col("e").alias("o_neg"),
-                       F.col("vec").alias("en")), "o_neg", "left")
-        .join(F.broadcast(W.withColumnRenamed("vec", "rp")),
-              F.col("_tp") == F.col("p"))
-        .drop("p")
-    )
-    out_schema = ("s long, _tp int, o long, o_neg long, "
-                  "g_s array<double>, g_o array<double>, "
-                  "g_n array<double>, g_r array<double>")
-    t = materialize(
-        t.select("s", "_tp", "o", "o_neg", "es", "eo", "en", "rp")
-        .mapInPandas(_rescal_grad_kernel(d, margin, deterministic),
-                     out_schema))
-    return _apply_grads(E, W, t, d, lr, deterministic, d_r=d * d)
-
-
-def fit_rescal(triples: DataFrame, n_entities: int, d: int = TE_DIM,
-               epochs: int = RS_EPOCHS, lr: float = RS_LR,
-               margin: float = RS_MARGIN,
-               deterministic: bool | None = None
-               ) -> tuple[DataFrame, DataFrame]:
-    """Distributed RESCAL fit → (E(e, vec), W(p, vec·d²)); per-epoch
-    checkpointing and the deterministic/scale gradient-mode auto-switch
-    (entity-count AND max-degree bounded) exactly as
-    :func:`fit_transe`."""
-    from kgspark.util import materialize
-
-    if deterministic is None:
-        deterministic = _auto_deterministic(triples, n_entities)
-    E, W = rescal_init(triples, d)
-    E, W = materialize(E), materialize(W)
-    for ep in range(epochs):
-        E, W = rescal_epoch(triples, E, W, n_entities, ep, d, lr, margin,
-                            deterministic)
-        E, W = materialize(E), materialize(W)
-    return E, W
 
 
 def rescal_trained_scores(triples: DataFrame, E: DataFrame, W: DataFrame,

@@ -139,7 +139,9 @@ def auc_metrics(scored: DataFrame, flag_col: str = "is_error",
         ).alias("pr_auc"),
     ]
     if with_n_facts:
-        aggs.append(F.sum("c").cast("long").alias("n_facts"))
+        # SUM over no groups is NULL; an empty ranked input has 0 facts
+        aggs.append(F.coalesce(F.sum("c").cast("long"), F.lit(0))
+                    .alias("n_facts"))
     return g.agg(*aggs)
 
 

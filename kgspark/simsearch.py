@@ -299,7 +299,7 @@ def ivf_centroids(emb: DataFrame, n_centroids: int | None = None) -> DataFrame:
 
 def ivf_centroids_refined(emb: DataFrame,
                           n_centroids: int | None = None,
-                          d: int | None = DIM) -> DataFrame:
+                          d: int | None = None) -> DataFrame:
     """→ (cid, cvec): ONE Lloyd refinement pass over the hash-picked
     seed centroids — assign every corpus vector to its nearest seed
     (top-1 cosine, the same broadcast map as the list build), then
@@ -313,11 +313,13 @@ def ivf_centroids_refined(emb: DataFrame,
     sides' order-dependent means agree and every downstream argmin sees
     identical values. A seed with an empty cluster keeps its (rounded)
     seed vector; in practice each seed's own vector lands in its
-    cluster (self-cosine 1), so clusters are non-empty."""
+    cluster (self-cosine 1), so clusters are non-empty. ``d=None``
+    probes the embedding width from the first row; pass it to skip that
+    job when it is known."""
     cents = ivf_centroids(emb, n_centroids)
     assign = ivf_assign(emb, cents, nprobe=1)
     if d is None:
-        # explicit opt-in probe for non-DIM corpora; guards empty input
+        # probe the width (any d, not just DIM); guards empty input
         row = emb.select("embedding").first()
         if row is None:
             return cents.select(

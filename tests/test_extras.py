@@ -259,6 +259,25 @@ def test_correction_loop_properties(spark):
     assert present.count() == 0  # new objects present
 
 
+def test_ran_dist_memo_holds_one_entry(spark):
+    """The shared induced-range / type-distribution memo is a single
+    slot: a call with another facts frame drops the held entry instead
+    of pinning one pair of checkpoints per call, and a repeat call with
+    the held key still hits."""
+    from kgspark import correct, pipeline
+    from tests.conftest import SF_TINY
+
+    g = pipeline.build_graph(spark, SF_TINY)
+    a = g.triples.select("s", "p", "o")
+    b = g.triples.select("s", "p", "o")
+    correct._shared_ran_dist(a, g.types, 0.95)
+    ran_b, _ = correct._shared_ran_dist(b, g.types, 0.95)
+    assert len(correct._RAN_DIST_MEMO) == 1
+    ((held, _, _, _),) = correct._RAN_DIST_MEMO.values()
+    assert held is b
+    assert correct._shared_ran_dist(b, g.types, 0.95)[0] is ran_b
+
+
 def test_type_corrections_properties(spark):
     """M6 type-flip correction: flips add exactly the induced range type
     to objects that lack it, and every accepted flip passes the gates
@@ -386,6 +405,18 @@ def test_ann_ivf_recall_and_scaling_defaults(spark, duck, emb):
     assert simsearch.auto_centroids(10 ** 9) == 4096
 
 
+def test_ivf_refined_centroids_probe_embedding_width(spark, emb):
+    """ivf_centroids_refined probes the embedding width by default: on
+    an 8-wide slice of the corpus every refined centroid has exactly 8
+    non-null components."""
+    emb8 = emb.select("vec_id", F.slice("embedding", 1, 8).alias("embedding"))
+    cents = simsearch.ivf_centroids_refined(emb8).collect()
+    assert cents
+    for r in cents:
+        assert len(r["cvec"]) == 8
+        assert all(x is not None for x in r["cvec"])
+
+
 def test_transe_distributed_fit_matches_numpy_bit_exact(spark):
     """M9 training: the distributed DataFrame-SGD TransE fit equals the
     Spark-free numpy replica BIT-EXACTLY (same sequential folds, same
@@ -395,15 +426,16 @@ def test_transe_distributed_fit_matches_numpy_bit_exact(spark):
     rows = [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1),
             (2, 2, 4), (1, 2, 5), (3, 1, 3)]
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    E, R = embeddings.fit_transe(t, n_entities=5)
-    En, Rn = embeddings.numpy_transe(rows, n_entities=5)
-    es = {r["e"]: r["vec"] for r in E.collect()}
-    rs = {r["p"]: r["vec"] for r in R.collect()}
-    assert sorted(es) == sorted(En) and sorted(rs) == sorted(Rn)
-    for e, v in es.items():
-        assert v == En[e]  # bit-exact
-    for p, v in rs.items():
-        assert v == Rn[p]
+    for d in (embeddings.TE_DIM, 8):
+        E, R = embeddings.fit(embeddings.TRANSE, t, n_entities=5, d=d)
+        En, Rn = embeddings.numpy_transe(rows, n_entities=5, d=d)
+        es = {r["e"]: r["vec"] for r in E.collect()}
+        rs = {r["p"]: r["vec"] for r in R.collect()}
+        assert sorted(es) == sorted(En) and sorted(rs) == sorted(Rn)
+        for e, v in es.items():
+            assert len(v) == d and v == En[e]  # bit-exact
+        for p, v in rs.items():
+            assert len(v) == d and v == Rn[p]
 
 
 def test_rescal_scores_match_python_replica(spark):
@@ -481,7 +513,7 @@ def test_transe_scale_mode_learns_and_tracks_deterministic(spark):
             (6, 2, 1), (5, 2, 2), (4, 2, 3), (3, 2, 6), (2, 2, 5)]
     n, d = 6, embeddings.TE_DIM
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    Es, Rs = embeddings.fit_transe(t, n, deterministic=False)
+    Es, Rs = embeddings.fit(embeddings.TRANSE, t, n, deterministic=False)
     es = {r["e"]: r["vec"] for r in Es.collect()}
     rs = {r["p"]: r["vec"] for r in Rs.collect()}
     En, Rn = embeddings.numpy_transe(rows, n)
@@ -539,17 +571,6 @@ def test_hole_distributed_fit_matches_numpy_bit_exact(spark):
     rows = [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1),
             (2, 2, 4), (1, 2, 5), (3, 1, 3)]
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    E, R = embeddings.fit_hole(t, n_entities=5)
-    En, Rn = embeddings.numpy_hole(rows, n_entities=5)
-    es = {r["e"]: r["vec"] for r in E.collect()}
-    rs = {r["p"]: r["vec"] for r in R.collect()}
-    assert sorted(es) == sorted(En) and sorted(rs) == sorted(Rn)
-    for e, v in es.items():
-        assert v == En[e]  # bit-exact
-    for p, v in rs.items():
-        assert v == Rn[p]
-
-    d = embeddings.TE_DIM
 
     def sdot(a, b):
         acc = 0.0
@@ -557,14 +578,25 @@ def test_hole_distributed_fit_matches_numpy_bit_exact(spark):
             acc += x * y
         return acc
 
-    def cc(a, b):
-        return [sum(a[i] * b[(i + k) % d] for i in range(d))
-                for k in range(d)]
+    for d in (embeddings.TE_DIM, 8):
+        E, R = embeddings.fit(embeddings.HOLE, t, n_entities=5, d=d)
+        En, Rn = embeddings.numpy_hole(rows, n_entities=5, d=d)
+        es = {r["e"]: r["vec"] for r in E.collect()}
+        rs = {r["p"]: r["vec"] for r in R.collect()}
+        assert sorted(es) == sorted(En) and sorted(rs) == sorted(Rn)
+        for e, v in es.items():
+            assert len(v) == d and v == En[e]  # bit-exact
+        for p, v in rs.items():
+            assert len(v) == d and v == Rn[p]
 
-    got = {(r["s"], r["p"], r["o"]): r["score"]
-           for r in embeddings.hole_trained_scores(t, E, R).collect()}
-    for s, p, o in rows:
-        assert got[(s, p, o)] == round(sdot(Rn[p], cc(En[s], En[o])), 6)
+        def cc(a, b):
+            return [sum(a[i] * b[(i + k) % d] for i in range(d))
+                    for k in range(d)]
+
+        got = {(r["s"], r["p"], r["o"]): r["score"]
+               for r in embeddings.hole_trained_scores(t, E, R, d).collect()}
+        for s, p, o in rows:
+            assert got[(s, p, o)] == round(sdot(Rn[p], cc(En[s], En[o])), 6)
 
 
 def test_hole_scale_mode_tracks_deterministic(spark):
@@ -576,7 +608,8 @@ def test_hole_scale_mode_tracks_deterministic(spark):
     rows = [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1),
             (2, 2, 4), (1, 2, 5), (3, 1, 3)]
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    Es, Rs = embeddings.fit_hole(t, n_entities=5, deterministic=False)
+    Es, Rs = embeddings.fit(embeddings.HOLE, t, n_entities=5,
+                            deterministic=False)
     En, Rn = embeddings.numpy_hole(rows, n_entities=5)
     es = {r["e"]: r["vec"] for r in Es.collect()}
     rs = {r["p"]: r["vec"] for r in Rs.collect()}
@@ -684,28 +717,29 @@ def test_rescal_distributed_fit_matches_numpy_bit_exact(spark):
     rows = [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1),
             (2, 2, 4), (1, 2, 5), (3, 1, 3)]
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    E, W = embeddings.fit_rescal(t, n_entities=5)
-    En, Wn = embeddings.numpy_rescal(rows, n_entities=5)
-    es = {r["e"]: r["vec"] for r in E.collect()}
-    ws = {r["p"]: r["vec"] for r in W.collect()}
-    assert sorted(es) == sorted(En) and sorted(ws) == sorted(Wn)
-    for e, v in es.items():
-        assert v == En[e]  # bit-exact
-    for p, v in ws.items():
-        assert v == Wn[p]
-    assert all(len(v) == embeddings.TE_DIM ** 2 for v in ws.values())
+    for d in (embeddings.TE_DIM, 8):
+        E, W = embeddings.fit(embeddings.RESCAL, t, n_entities=5, d=d)
+        En, Wn = embeddings.numpy_rescal(rows, n_entities=5, d=d)
+        es = {r["e"]: r["vec"] for r in E.collect()}
+        ws = {r["p"]: r["vec"] for r in W.collect()}
+        assert sorted(es) == sorted(En) and sorted(ws) == sorted(Wn)
+        for e, v in es.items():
+            assert len(v) == d and v == En[e]  # bit-exact
+        for p, v in ws.items():
+            assert v == Wn[p]
+        assert all(len(v) == d ** 2 for v in ws.values())
 
-    d = embeddings.TE_DIM
+        def mv(w, v):
+            return [sum(w[i * d + j] * v[j] for j in range(d))
+                    for i in range(d)]
 
-    def mv(w, v):
-        return [sum(w[i * d + j] * v[j] for j in range(d))
-                for i in range(d)]
-
-    got = {(r["s"], r["p"], r["o"]): r["score"]
-           for r in embeddings.rescal_trained_scores(t, E, W).collect()}
-    for s, p, o in rows:
-        exp = round(sum(a * b for a, b in zip(En[s], mv(Wn[p], En[o]))), 6)
-        assert abs(got[(s, p, o)] - exp) < 2e-6
+        got = {(r["s"], r["p"], r["o"]): r["score"]
+               for r in embeddings.rescal_trained_scores(
+                   t, E, W, d).collect()}
+        for s, p, o in rows:
+            exp = round(
+                sum(a * b for a, b in zip(En[s], mv(Wn[p], En[o]))), 6)
+            assert abs(got[(s, p, o)] - exp) < 2e-6
 
 
 def test_rescal_scale_mode_tracks_deterministic_and_learns(spark):
@@ -719,7 +753,7 @@ def test_rescal_scale_mode_tracks_deterministic_and_learns(spark):
             (6, 2, 1), (5, 2, 2), (4, 2, 3), (3, 2, 6), (2, 2, 5)]
     n, d = 6, embeddings.TE_DIM
     t = spark.createDataFrame(rows, "s long, p int, o long")
-    Es, Ws = embeddings.fit_rescal(t, n, deterministic=False)
+    Es, Ws = embeddings.fit(embeddings.RESCAL, t, n, deterministic=False)
     En, Wn = embeddings.numpy_rescal(rows, n)
     es = {r["e"]: r["vec"] for r in Es.collect()}
     ws = {r["p"]: r["vec"] for r in Ws.collect()}

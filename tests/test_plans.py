@@ -87,45 +87,27 @@ def test_rank_has_no_single_partition_exchange(spark):
     assert "Exchange SinglePartition" not in t
 
 
-def test_transe_scale_mode_gradient_plan_has_no_collect_list(spark):
+@pytest.mark.parametrize("family", ["TRANSE", "HOLE", "RESCAL"])
+def test_scale_mode_gradient_plan_has_no_collect_list(spark, family):
     """The scale-mode (deterministic=False) gradient fold must be a
-    plain partial-sum hash aggregate: no collect_list / array_sort per
-    entity, so hub-entity degree never materializes as one giant row.
-    The deterministic mode keeps the sorted fold (oracle parity) — the
-    probe is validated against it."""
+    plain partial-sum hash aggregate for every trainer family — on the
+    entity side and on the relation side (d² wide for RESCAL): no
+    collect_list / array_sort per entity, so hub-entity degree never
+    materializes as one giant row. The deterministic mode keeps the
+    sorted fold (oracle parity) — the probe is validated against it."""
     from kgspark import embeddings
 
+    fam = getattr(embeddings, family)
     t = spark.createDataFrame(
         [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1)],
         "s long, p int, o long")
-    E, R = embeddings.transe_init(t)
-    E2d, _ = embeddings.transe_epoch(t, E, R, n_entities=5, epoch=0,
-                                     deterministic=True)
+    E, R = embeddings.init_params(fam, t)
+    E2d, _ = embeddings.train_epoch(fam, t, E, R, n_entities=5, epoch=0,
+                                    deterministic=True)
     assert "collect_list" in _plan(E2d)  # probe sanity: fold is visible
-    E2s, _ = embeddings.transe_epoch(t, E, R, n_entities=5, epoch=0,
-                                     deterministic=False)
-    p = _plan(E2s)
-    assert "collect_list" not in p
-    assert "array_sort" not in p
-    assert "HashAggregate" in p
-
-
-def test_rescal_scale_mode_gradient_plan_has_no_collect_list(spark):
-    """RESCAL's scale-mode gradient fold (d²-wide relation side) must be
-    the same plain partial-sum hash aggregate as TransE's — no
-    collect_list / array_sort rows growing with entity degree."""
-    from kgspark import embeddings
-
-    t = spark.createDataFrame(
-        [(1, 1, 2), (2, 1, 3), (3, 2, 4), (4, 2, 5), (5, 1, 1)],
-        "s long, p int, o long")
-    E, W = embeddings.rescal_init(t)
-    E2d, _ = embeddings.rescal_epoch(t, E, W, n_entities=5, epoch=0,
-                                     deterministic=True)
-    assert "collect_list" in _plan(E2d)  # probe sanity: fold is visible
-    E2s, W2s = embeddings.rescal_epoch(t, E, W, n_entities=5, epoch=0,
-                                       deterministic=False)
-    for df in (E2s, W2s):
+    E2s, R2s = embeddings.train_epoch(fam, t, E, R, n_entities=5, epoch=0,
+                                      deterministic=False)
+    for df in (E2s, R2s):
         p = _plan(df)
         assert "collect_list" not in p
         assert "array_sort" not in p

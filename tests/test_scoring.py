@@ -91,3 +91,17 @@ def test_global_ordinal_is_dense(spark, graph):
     n = r.count()
     got = r.agg(F.min("rank"), F.max("rank"), F.countDistinct("rank")).first()
     assert tuple(got) == (1, n, n)
+
+
+def test_evaluate_empty_input_counts_zero_facts(spark, duck):
+    """An empty ranked input yields one metrics row with n_facts = 0
+    (not NULL), matching the oracle's count(*)."""
+    empty = spark.createDataFrame(
+        [], "s long, p int, o long, score double, rank long, "
+            "is_error boolean")
+    m = rank.evaluate(empty).first()
+    assert m["n_facts"] == 0
+    assert m["n_errors"] == 0
+    cte = ("SELECT 1::BIGINT AS s, 1 AS p, 1::BIGINT AS o, 0.0 AS score, "
+           "false AS is_error WHERE false")
+    assert duck.execute(rank.evaluate_sql(cte)).fetchone()[5] == 0
